@@ -5,7 +5,8 @@ Python string object before matching; at tens of millions of rows per
 executor that object churn dominates and kills scaling. This variant stays
 in Arrow end to end:
 
-* `df.mapInArrow` streams RecordBatches straight from the JVM;
+* a scalar `arrow_udf` streams the text/tool Arrow arrays straight from
+  the JVM;
 * per signature string, ONE `pyarrow.compute.match_substring[_regex]`
   kernel call over the whole batch (C++-vectorized RE2 / literal scan,
   zero Python objects in the hot path);
@@ -29,7 +30,7 @@ from typing import Iterator, Tuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..signatures.compile import boolean_regex, literal_probe
 from ..signatures.conditions import render_condition
@@ -61,13 +62,6 @@ YARA_STRUCT = pa.struct(
         pa.field("matched_strings", pa.list_(pa.string())),
     ]
 )
-
-MATCH_COLS_DDL = (
-    "_m_fname array<struct<pattern:string,score:int,description:string>>, "
-    "_m_yara array<struct<rule:string,score:int,description:string,"
-    "author:string,reference:string,matched_strings:array<string>>>"
-)
-
 
 def _mask(arr, pattern: str, *, regex: bool, ignore_case: bool = False) -> np.ndarray:
     if regex:
@@ -678,31 +672,3 @@ def _as_array(arr):
     if isinstance(arr, pa.ChunkedArray):
         return arr.combine_chunks()
     return arr
-
-
-def with_matches_arrow(
-    spark: SparkSession, df: DataFrame, sigs: SignatureSet
-) -> DataFrame:
-    """Append `_m_fname` / `_m_yara` match columns via mapInArrow, passing
-    every input column through untouched. (Kept for comparison; the
-    arrow_udf path above ships less data across the bridge and is the
-    pipeline default.)"""
-    from .ext_bits import ext_bits_col
-
-    bc = spark.sparkContext.broadcast(sigs.to_payload())
-    df = df.withColumn("ext_bits", ext_bits_col(sigs))
-    out_ddl = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [MATCH_COLS_DDL]
-    )
-
-    def gen(batches):
-        engine = _engine_for(bc.value)
-        for batch in batches:
-            fname_arr, yara_arr, _c2 = match_record_batch(engine, batch)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [fname_arr, yara_arr],
-                names=[*batch.schema.names, "_m_fname", "_m_yara"],
-            )
-
-    return df.mapInArrow(gen, out_ddl).drop("ext_bits")

@@ -74,10 +74,6 @@ def reason_struct(
     )
 
 
-def empty_reason_array() -> Column:
-    return F.lit(None).cast(f"array<{REASON_TYPE}>")
-
-
 # Below this many entries a hash dim table MAY be rendered as literal
 # expressions (InSet probe / CASE lookup) instead of a broadcast join:
 # in local mode every broadcast exchange costs ~0.25-0.4s of per-action

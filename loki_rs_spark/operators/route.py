@@ -4,9 +4,14 @@ The reference serializes one JSONL stream and keeps live per-severity
 counters; the north rule asks for per-severity fan-out sinks with per-sink
 aggregate match counts. Spark-first rendering:
 
-* fan-out = ONE write partitioned by `level` (a single pass over the data,
-  three physical sink directories: level=ALERT/WARNING/NOTICE) instead of
-  three filtered jobs — at 100 TB you never want to rescan per severity;
+* fan-out = ONE write partitioned by `level` (a single evaluation of the
+  scan, three physical sink directories: level=ALERT/WARNING/NOTICE)
+  instead of three filtered jobs — at 100 TB you never want to rescan per
+  severity. The write has no exchange, so files are sorted by
+  (conv_id, turn_idx) each but carry no global order (contract in
+  `write_severity_sinks`). A range exchange is deliberately absent: its
+  partitioner samples the keys by running the lazy plan, which evaluated
+  the whole scan — Arrow matcher UDF included — a second time per write;
 * counters  = an `agg` over the scanned/evaluated frames (the reference's
   rayon `reduce` of 5-tuples, src/modules/filesystem_scan.rs:544-553);
 * exit code = driver-side check on the aggregate row (src/main.rs:1568-75).
@@ -78,18 +83,21 @@ def write_severity_sinks(
     mode: str = "overwrite",
     fmt: str | None = None,
 ) -> None:
-    """Per-severity fan-out in ONE pass: partitionBy('level') produces the
-    three sink directories (or one Iceberg table level-partitioned, with
-    fmt='iceberg' — see sources/table_format.py). Rows are kept in stable
-    (conv_id, turn_idx) order within files via a range repartition —
-    skew-safe because the range partitioner SAMPLES the key distribution
-    and splits oversized conversations across partitions while preserving
-    global order."""
+    """Per-severity fan-out in ONE evaluation of `routed`: partitionBy
+    ('level') produces the three sink directories (or one Iceberg table
+    level-partitioned, with fmt='iceberg' — see sources/table_format.py).
+
+    Contract: no exchange and no sampling job, so the scan runs once per
+    write; each file holds one scan task's rows of one level, sorted by
+    (conv_id, turn_idx); a sink holds at most (scan tasks x levels) files.
+    The sort leads with `level` because the writer requires its input
+    ordered by the partition column: a sort without that prefix is
+    replaced by the writer's own sort on `level` alone, and the
+    in-file order is lost."""
     from ..sources.table_format import write_partitioned
 
     write_partitioned(
-        routed.repartitionByRange("conv_id", "turn_idx")
-        .sortWithinPartitions("conv_id", "turn_idx"),
+        routed.sortWithinPartitions("level", "conv_id", "turn_idx"),
         f"{out_dir}/routed",
         ("level",),
         mode=mode,

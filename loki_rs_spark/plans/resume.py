@@ -100,10 +100,14 @@ def run_resumable_scan(
 
     # 'overwrite_partitions': parquet = dynamic partition overwrite (with
     # the pre-clear above); iceberg = overwritePartitions(), an atomic
-    # REPLACE snapshot that subsumes the pre-clear (table_format.py)
+    # REPLACE snapshot that subsumes the pre-clear (table_format.py).
+    # The hash exchange on part_id gives one file per bucket. The sort
+    # leads with part_id because the writer requires its input ordered by
+    # the partition column: without that prefix it replaces this sort by
+    # its own on part_id alone and the files lose (conv_id, turn_idx) order.
     write_partitioned(
         routed.repartition(F.col("part_id"))
-        .sortWithinPartitions("conv_id", "turn_idx"),
+        .sortWithinPartitions("part_id", "conv_id", "turn_idx"),
         f"{out_dir}/routed",
         ("part_id",),
         mode="overwrite_partitions",

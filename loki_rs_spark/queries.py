@@ -160,6 +160,16 @@ def q_hash_ioc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             continue
         types.append(hash_type)
         dim_rows += [(hash_type, h.hash_value, h.score) for h in iocs]
+    if not types:
+        # no hash IOCs: nothing can hit, and F.array() of zero structs
+        # would not type-check
+        return df.select(
+            "conv_id",
+            "turn_idx",
+            F.lit(None).cast("string").alias("hash_type"),
+            F.lit(None).cast("string").alias("hash_value"),
+            F.lit(None).cast("int").alias("ioc_score"),
+        ).limit(0)
     dim = spark.createDataFrame(
         dim_rows, "ht string, hash_value string, ioc_score int"
     )

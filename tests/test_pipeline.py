@@ -199,3 +199,21 @@ def test_literal_dims_equal_join_dims(spark, sigs, tmp_path):
     assert sorted(map(tuple, s_join.collect())) == sorted(
         map(tuple, s_lit.collect())
     )
+
+
+def test_hash_ioc_hits_without_hash_iocs(spark, sigs, monkeypatch):
+    """A bundle with no hash IOCs gives an empty frame with the usual
+    five typed columns, not an AnalysisException."""
+    import dataclasses
+
+    from loki_rs_spark import queries
+
+    with_iocs = queries.q_hash_ioc_hits(spark, SF_SMALL).dtypes
+    monkeypatch.setattr(
+        queries,
+        "bundled_signatures",
+        lambda: dataclasses.replace(sigs, hash_iocs=()),
+    )
+    got = queries.q_hash_ioc_hits(spark, SF_SMALL)
+    assert got.dtypes == with_iocs
+    assert got.count() == 0

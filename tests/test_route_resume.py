@@ -3,6 +3,10 @@ checkpoint/resume idempotency."""
 
 from __future__ import annotations
 
+import glob
+import uuid
+
+import pyarrow.parquet as pq
 import pytest
 
 from loki_rs_spark.config import ScanConfig
@@ -60,6 +64,56 @@ def test_severity_fanout(spark, result, tmp_path):
 
     subdirs = {d for d in os.listdir(f"{out}/routed") if d.startswith("level=")}
     assert subdirs == {"level=ALERT", "level=WARNING", "level=NOTICE"}
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs started by `action`, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_severity_sinks_evaluate_scan_once(spark, result, tmp_path):
+    """The routed write launches no more jobs than a noop write of the
+    same frame: an exchange that samples its keys (a range partitioner)
+    runs the whole scan, matcher UDF included, in an extra job."""
+    out = str(tmp_path / "sinks")
+    noop = _jobs_run(
+        spark,
+        lambda: result.routed.write.format("noop").mode("overwrite").save(),
+    )
+    sinks = _jobs_run(spark, lambda: write_severity_sinks(result.routed, out))
+    assert sinks <= noop
+
+
+def _unsorted_files(root: str) -> list[str]:
+    files = glob.glob(f"{root}/**/*.parquet", recursive=True)
+    assert files
+    bad = []
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        if keys != sorted(keys):
+            bad.append(f)
+    return bad
+
+
+def test_sink_files_sorted_by_turn_key(spark, sigs, result, tmp_path):
+    """Every file of both sinks (the level fan-out and the resumable
+    scan's bucket sink) holds its rows in (conv_id, turn_idx) order."""
+    fanout = str(tmp_path / "fanout")
+    write_severity_sinks(result.routed, fanout)
+    assert _unsorted_files(f"{fanout}/routed") == []
+
+    resumable = str(tmp_path / "resumable")
+    transcripts = load_transcripts(spark, SF_SMALL, rep=REP)
+    run_resumable_scan(spark, transcripts, sigs, resumable, CFG, n_buckets=8)
+    assert _unsorted_files(f"{resumable}/routed") == []
 
 
 def test_jsonl_roundtrip(spark, result, tmp_path):

@@ -83,8 +83,8 @@ def test_conversation_skew(spark):
 
 def test_per_turn_text_equality_under_stable_ordering(spark, tmp_path):
     """North-rule invariant: per-turn text equality under stable
-    (conv_id, turn_idx) ordering — write with the pipeline's range
-    repartition + sortWithinPartitions, read back, compare the ordered
+    (conv_id, turn_idx) ordering — write with a range repartition +
+    sortWithinPartitions, read back, compare the ordered
     text sequence against the DuckDB rendering ordered the same way."""
     df = load_transcripts(spark, SF_SMALL, rep=REP)
     out = str(tmp_path / "ordered")
